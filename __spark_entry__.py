@@ -160,8 +160,8 @@ def q_profile_stats(spark: SparkSession, sf: str) -> DataFrame:
     # Two fused aggs, not one: mixing count_distinct (which plans an
     # Expand ×(N+1)) with exact-percentile buffers multiplies the buffer
     # traffic ~8× — splitting them measured 34s → 4s at sf0.1. ndv stays
-    # exact for oracle parity; the profiler module's scale path uses
-    # approx_count_distinct.
+    # exact for oracle parity; the profiler module's scale path uses the
+    # DataSketches HLL (hll_sketch_agg).
     # Quartiles come from profiler.exact_percentiles — bit-identical to
     # the percentile() aggregate (pytest-pinned) without its
     # single-reducer value-map merge, which alone cost 12.5 s on the

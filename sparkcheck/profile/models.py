@@ -21,7 +21,7 @@ class ColumnStatistics:
     total_count: int = 0
     null_count: int = 0
     non_null_count: int = 0
-    distinct_count: int | None = None  # approx (HLL) at scale, exact in tests
+    distinct_count: int | None = None  # DataSketches HLL (lg_k 14) estimate, or exact
     min_value: Any = None
     max_value: Any = None
     mean: float | None = None
@@ -44,7 +44,7 @@ class ColumnStatistics:
     # keys, profiler/__init__.py:258-269; schema_introspector.py:168-455
     # reads them from the catalog — parquet has no catalog, but the
     # candidate test ndv == non-null ∧ null_count == 0 is free from the
-    # stats already computed). Under HLL ndv this is an ESTIMATE (3·rsd
+    # stats already computed). Under HLL ndv this is an ESTIMATE (3%
     # tolerance) — confirm with a uniqueness rule before relying on it.
     pk_candidate: bool = False
 

@@ -12,6 +12,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MEM_MB = 48 << 10
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a new session: ``SPARKCHECK_DRIVER_MEM``
+    if set, else half of physical RAM capped at 48g. In local mode the
+    driver JVM runs every task, so a heap sized past RAM gets it killed
+    by the OOM killer instead of spilling."""
+    env = os.environ.get("SPARKCHECK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):  # no sysconf (Windows)
+        return "4g"
+    return f"{max(1 << 10, min(_MAX_DRIVER_MEM_MB, phys // 2 >> 20))}m"
+
 
 def get_spark(
     app_name: str = "sparkcheck",
@@ -39,7 +56,7 @@ def get_spark(
         # NULL-propagation of size()/split() etc. is version-independent.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARKCHECK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # FAIR scheduling so concurrently-submitted rule/test jobs share
         # executors instead of queueing behind one long scan (the engine

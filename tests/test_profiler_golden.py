@@ -4,6 +4,7 @@ test (reference tests/modules/profiler/test_profiler_streaming.py:12-62):
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkcheck.profile import histogram, profile_table, top_k, pattern_match_rates
@@ -100,12 +101,20 @@ def test_hll_sketches_merge_across_batches(spark):
     from pyspark.sql import functions as F
     from sparkcheck.profile.sketches import merge_ndv_sketches, ndv_sketches
 
-    df = spark.range(10000).select((F.col("id") % 3333).alias("k"))
+    df = spark.range(10000).select(
+        "id",
+        (F.col("id") % 3333).alias("k"),
+        ((F.col("id") % 2500) / 4).cast("decimal(10,2)").alias("amount"),
+        F.date_add(F.lit("1995-01-01").cast("date"), (F.col("id") % 2000).cast("int"))
+        .alias("day"),
+    )
     a = df.where(F.col("id") < 6000)
     b = df.where(F.col("id") >= 6000)
-    batches = ndv_sketches(a, ["k"]).unionByName(ndv_sketches(b, ["k"]))
-    est = merge_ndv_sketches(batches, ["k"]).collect()[0]["k__ndv"]
-    assert abs(est - 3333) / 3333 < 0.02
+    cols = ["k", "amount", "day"]
+    batches = ndv_sketches(a, cols).unionByName(ndv_sketches(b, cols))
+    est = merge_ndv_sketches(batches, cols).collect()[0]
+    for c, exact in [("k", 3333), ("amount", 2500), ("day", 2000)]:
+        assert abs(est[f"{c}__ndv"] - exact) / exact < 0.02, (c, est[f"{c}__ndv"])
 
 
 def test_profile_is_three_actions_regardless_of_columns(spark):
@@ -258,3 +267,114 @@ def test_profile_stats_paths_identical(spark):
         assert sorted(map(tuple, big.collect())) == small_rows
     finally:
         entrymod._PCT_FUSED_MAX_BYTES = saved
+
+
+def _typed_frame(spark, n, m):
+    """n rows, ``m`` distinct non-NULL values in every column (bool: 2),
+    one column per type the profiler's HLL image maps."""
+    k = F.col("id") % m
+    return spark.range(n).select(
+        (k % 100).cast("tinyint").alias("b"),
+        (k % 30000).cast("short").alias("s"),
+        k.cast("int").alias("i"),
+        k.alias("l"),
+        (k % 2 == 0).alias("bo"),
+        (k / 7).cast("float").alias("f"),
+        (k / 7).alias("d"),
+        (k / 7).cast("decimal(12,2)").alias("dec"),
+        F.date_add(F.lit("2000-01-01").cast("date"), k.cast("int")).alias("dt"),
+        F.timestamp_micros(k * 1000003).alias("ts"),
+        F.timestamp_micros(k * 1000003).cast("timestamp_ntz").alias("tsn"),
+        F.concat(F.lit("v"), k.cast("string")).alias("str"),
+        F.concat(F.lit("v"), k.cast("string")).cast("binary").alias("bin"),
+        F.array(k, k + 1).alias("arr"),
+        F.struct(k.alias("x"), F.lit("y").alias("y")).alias("st"),
+        F.create_map(F.lit("k"), k).alias("mp"),
+    )
+
+
+def test_profile_fused_agg_plan_has_no_hllpp_buffer(spark, monkeypatch):
+    """The fused stats agg counts distinct values with the one-field
+    DataSketches HLL, not HLL++: no approx_count_distinct in the executed
+    plan, and the partial aggregate's output grows by a small constant
+    per column, not by HLL++'s ~1.6 k register words (rsd 0.01)."""
+    df = _typed_frame(spark, 200, 50)
+    frame_cls = type(df)  # the classic DataFrame on Spark 4, not the ABC
+    aggs = []
+    agg = frame_cls.agg
+
+    def recording_agg(self, *exprs):
+        out = agg(self, *exprs)
+        aggs.append(out)
+        return out
+
+    monkeypatch.setattr(frame_cls, "agg", recording_agg)
+
+    def partial_width(plan) -> int:
+        name = plan.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return partial_width(plan.executedPlan())
+        if "QueryStage" in name:
+            return partial_width(plan.plan())
+        if name.endswith("Aggregate"):
+            fns = plan.aggregateExpressions()
+            if fns.size() and str(fns.apply(0).mode()) == "Partial":
+                return plan.output().size()
+        kids = plan.children()
+        widths = [partial_width(kids.apply(i)) for i in range(kids.size())]
+        return max(widths, default=0)
+
+    widths = {}
+    for ncols in (8, 16):
+        aggs.clear()
+        profile_table(df, columns=df.columns[:ncols], with_histograms=False,
+                      with_top_k=False)
+        plan = aggs[0]._jdf.queryExecution().executedPlan()
+        assert "approx_count_distinct" not in plan.toString()
+        assert "hll_sketch_agg" in plan.toString()
+        widths[ncols] = partial_width(plan)
+    per_col = (widths[16] - widths[8]) / 8
+    assert 0 < per_col < 40, widths
+
+
+@pytest.mark.parametrize("n,m,tol", [(300, 100, 0.0), (40000, 20000, 0.03)])
+def test_hll_distinct_matches_count_distinct_per_type(spark, n, m, tol):
+    """approx_distinct=True equals count_distinct at ≤100 distinct values
+    and stays within 3% at 20 k, for every type the HLL image maps."""
+    df = _typed_frame(spark, n, m)
+    prof = profile_table(df, detect_patterns=False, with_histograms=False,
+                         with_top_k=False)
+    cols = [c for c in df.columns if c != "mp"]  # maps are not comparable
+    exact = df.agg(*[F.count_distinct(c).alias(c) for c in cols]).collect()[0].asDict()
+    exact["mp"] = m
+    for c, want in exact.items():
+        got = prof.columns[c].distinct_count
+        assert abs(got - want) <= tol * want, (c, got, want)
+
+
+def test_hll_distinct_edge_cases(spark):
+    """−0.0/0.0 and NaN count as count_distinct counts them; all-NULL
+    columns and an empty frame give 0."""
+    rows = [(0.0,), (-0.0,), (float("nan"),), (float("nan"),), (1.0,), (None,)]
+    df = spark.createDataFrame(rows, "d double").select(
+        "d", F.col("d").cast("float").alias("f"))
+    prof = profile_table(df, with_histograms=False, with_top_k=False)
+    exact = df.agg(F.count_distinct("d"), F.count_distinct("f")).collect()[0]
+    assert tuple(exact) == (3, 3)
+    assert prof.columns["d"].distinct_count == 3
+    assert prof.columns["f"].distinct_count == 3
+
+    nulls = spark.range(50).select(
+        F.lit(None).alias("void"),
+        F.lit(None).cast("double").alias("d"),
+        F.lit(None).cast("string").alias("s"),
+        F.lit(None).cast("date").alias("dt"),
+    )
+    prof = profile_table(nulls, with_histograms=False, with_top_k=False)
+    assert {c: cs.distinct_count for c, cs in prof.columns.items()} == dict.fromkeys(
+        nulls.columns, 0)
+
+    empty = _typed_frame(spark, 0, 1)
+    prof = profile_table(empty, detect_patterns=False)
+    assert prof.total_rows == 0
+    assert all(cs.distinct_count == 0 for cs in prof.columns.values())

@@ -20,8 +20,8 @@ def orders(spark):
 
 
 def test_hll_distinct_within_5pct(orders):
-    # rsd=0.01: the profiler's scale setting (default rsd 0.05 measured
-    # 6.7% off on this table — too loose for drift deltas)
+    # rsd=0.01 (default rsd 0.05 measured 6.7% off on this table — too
+    # loose for drift deltas)
     row = orders.agg(
         F.count_distinct("o_custkey").alias("exact"),
         F.approx_count_distinct("o_custkey", 0.01).alias("approx"),
