@@ -17,17 +17,18 @@ components with checkpointed lineage.
 Resumability (``checkpoint_dir=``): at 100 TB each stage is hours of
 work, so stage outputs persist as parquet keyed by
 (input_fingerprint, stage params) and a re-run skips completed stages.
-Only the MINIMAL frames are persisted — surviving ids, near-dup pairs,
-cluster labels — never full document rows (a row cache would rival the
-corpus itself; the final assembly re-joins the pruned source, the same
-re-scan-beats-cache result as BENCH/VERDICTS_SINK.md). The fingerprint
-must identify the input SNAPSHOT (e.g. an Iceberg snapshot id) — it is
-required with ``checkpoint_dir`` because silently reusing stale stages
-against a changed input would corrupt the output.
+Only the MINIMAL frames are persisted — surviving ids, band keys,
+near-dup pairs, cluster labels — never full document rows (a row cache
+would rival the corpus itself; the final assembly re-joins the pruned
+source, the same re-scan-beats-cache result as BENCH/VERDICTS_SINK.md).
+The fingerprint must identify the input SNAPSHOT (e.g. an Iceberg
+snapshot id) — it is required with ``checkpoint_dir`` because silently
+reusing stale stages against a changed input would corrupt the output.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -42,11 +43,11 @@ from sparkcheck.dedup.minhash import (
     band_assignments,
     candidate_pairs_from_bands,
     incremental_near_duplicates,
-    minhash_near_duplicates,
     minhash_signatures,
     write_band_index,
 )
 from sparkcheck.dedup.jaccard import jaccard_for_pairs
+from sparkcheck.io.cache import cached_parquet
 
 
 def _drop_url_duplicates(df: DataFrame, url_col: str, id_col: str) -> DataFrame:
@@ -76,18 +77,6 @@ def _drop_url_duplicates(df: DataFrame, url_col: str, id_col: str) -> DataFrame:
     kept = dedupable.join(keep, on=id_col, how="left_semi")
     exempt = df.where(F.col(url_col).isNull() | ~has_scheme)
     return kept.unionByName(exempt)
-
-
-def _stage_cached(
-    base_dir: str, stage: str, build: Callable[[], DataFrame], spark
-) -> DataFrame:
-    """Return the stage's persisted output, building + persisting it if
-    absent (io.cache.cached_parquet: Hadoop-FS _SUCCESS probe so
-    hdfs://s3a:// checkpoint dirs resume too, per-path lock against
-    concurrent driver threads, overwrite-on-partial-write)."""
-    from sparkcheck.io.cache import cached_parquet
-
-    return cached_parquet(spark, base_dir.rstrip("/") + "/" + stage, build)
 
 
 def dedup_corpus(
@@ -125,8 +114,11 @@ def dedup_corpus(
     parallelism). Docs in no cluster — including NULL-text docs, which
     are exempt from content hashing — pass through untouched.
 
-    ``checkpoint_dir``: persist each stage (exact-survivor ids, verified
-    near-dup pairs, cluster labels) under
+    The stages are ``url_ids`` (with ``url_col``), ``exact_ids``,
+    ``bands`` (MinHash band keys), ``pairs`` (verified near-dup pairs)
+    and ``clusters`` (component labels). Without ``checkpoint_dir``
+    each is materialized in memory (``localCheckpoint``).
+    ``checkpoint_dir``: persist each stage under
     ``<dir>/<md5(input_fingerprint, params)>/<stage>/`` and skip stages
     already completed — an interrupted 100 TB run resumes after the
     last finished stage instead of recomputing it.
@@ -153,54 +145,19 @@ def dedup_corpus(
     persisted as a bucketed catalog table (``write_band_index``) that
     ``incremental_near_duplicates(corpus_bands=<name>)`` probes with
     zero Exchange on the index side, so tomorrow's batch never rescans
-    the corpus. The band frame is shared with pair generation (with
-    ``checkpoint_dir`` it is a cached stage, so the index write reuses
-    it from parquet; without, it is recomputed for the write — prefer
-    checkpointing for large corpora). The index write is EAGER: it runs
+    the corpus. The index write reads the ``bands`` stage that pair
+    generation built (or builds it, when a resumed run read ``pairs``
+    back without it). The index write is EAGER: it runs
     (and therefore computes survivor ids) inside this call."""
-    bands = None
     if checkpoint_dir is None:
-        # Materialize the narrow SURVIVOR-ID frames (localCheckpoint —
-        # the in-memory analog of the checkpointed path's parquet
-        # stages): `exact` feeds pair generation AND the final member
-        # join, and each un-materialized consumer would re-run the whole
-        # url+exact groupBy/semi-join chain (measured 2.4× the whole
-        # pipeline wall at 250k docs). Ids only — full rows re-join the
-        # pruned source, same shape as the checkpointed path.
-        source = df
-        if url_col is not None:
-            url_ids = (
-                _drop_url_duplicates(df, url_col, id_col)
-                .select(id_col)
-                .localCheckpoint()
-            )
-            df = df.join(url_ids, on=id_col, how="left_semi")
-        exact_ids = (
-            drop_exact_duplicates(df, text_col=text_col, id_col=id_col)
-            .select(id_col)
-            .localCheckpoint()
-        )
-        # join against the ORIGINAL source, not the url-filtered frame:
-        # exact_ids is already a subset of the URL survivors, so one
-        # semi-join reproduces the composition and every downstream
-        # consumer of `exact` pays one broadcast semi-join, not two
-        exact = source.join(exact_ids, on=id_col, how="left_semi")
-        if band_index_table is not None:
-            bands = band_assignments(
-                minhash_signatures(exact, text_col, id_col, k, num_hashes, hash_fn),
-                num_hashes, rows_per_band,
-            )
-            pairs = jaccard_for_pairs(
-                exact, candidate_pairs_from_bands(bands, max_bucket),
-                text_col, id_col, k, threshold,
-            )
-        else:
-            pairs = minhash_near_duplicates(
-                exact, text_col=text_col, id_col=id_col, k=k, num_hashes=num_hashes,
-                rows_per_band=rows_per_band, threshold=threshold, max_bucket=max_bucket,
-                hash_fn=hash_fn,
-            )
-        clusters = connected_components(pairs, max_iter=max_iter)
+        # localCheckpoint: the in-memory analog of a parquet stage. Every
+        # stage has several consumers (`exact_ids` feeds pair generation
+        # AND the final member join; `bands` feeds the hot-bucket count,
+        # the self-join and the index write) and Spark shares no common
+        # subplans, so an un-materialized stage re-runs its whole lineage
+        # per consumer (measured 2.4x the pipeline wall at 250k docs).
+        def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+            return build().localCheckpoint()
     else:
         if not input_fingerprint:
             raise ValueError(
@@ -222,62 +179,44 @@ def dedup_corpus(
         ).hexdigest()
         base = os.path.join(checkpoint_dir, key)
         spark = df.sparkSession
-        source = df
-        if url_col is not None:
-            url_ids = _stage_cached(
-                base, "url_ids",
-                lambda: _drop_url_duplicates(df, url_col, id_col).select(id_col),
-                spark,
-            )
-            df = df.join(url_ids, on=id_col, how="left_semi")
-        exact_ids = _stage_cached(
-            base, "exact_ids",
-            lambda: drop_exact_duplicates(
-                df, text_col=text_col, id_col=id_col
-            ).select(id_col),
-            spark,
+
+        def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+            return cached_parquet(spark, f"{base}/{name}", build)
+
+    source = df
+    if url_col is not None:
+        url_ids = stage(
+            "url_ids",
+            lambda: _drop_url_duplicates(source, url_col, id_col).select(id_col),
         )
-        # one semi-join against the original source — see the plain path
-        exact = source.join(exact_ids, on=id_col, how="left_semi")
-        if band_index_table is not None:
-            # materialize the band frame as its OWN stage so pair
-            # generation and the final index write share one computation
-            # (the stage is only added when an index is requested — the
-            # plain path keeps its original stage layout and resume
-            # semantics; the pairs output is identical either way, so
-            # the checkpoint key is unchanged and caches stay shareable)
-            bands = _stage_cached(
-                base, "bands",
-                lambda: band_assignments(
-                    minhash_signatures(exact, text_col, id_col, k, num_hashes, hash_fn),
-                    num_hashes, rows_per_band,
-                ),
-                spark,
-            )
-            pairs = _stage_cached(
-                base, "pairs",
-                lambda: jaccard_for_pairs(
-                    exact, candidate_pairs_from_bands(bands, max_bucket),
-                    text_col, id_col, k, threshold,
-                ),
-                spark,
-            )
-        else:
-            pairs = _stage_cached(
-                base, "pairs",
-                lambda: minhash_near_duplicates(
-                    exact, text_col=text_col, id_col=id_col, k=k,
-                    num_hashes=num_hashes, rows_per_band=rows_per_band,
-                    threshold=threshold, max_bucket=max_bucket,
-                    hash_fn=hash_fn,
-                ),
-                spark,
-            )
-        clusters = _stage_cached(
-            base, "clusters",
-            lambda: connected_components(pairs, max_iter=max_iter),
-            spark,
+        df = source.join(url_ids, on=id_col, how="left_semi")
+    exact_ids = stage(
+        "exact_ids",
+        lambda: drop_exact_duplicates(df, text_col=text_col, id_col=id_col)
+        .select(id_col),
+    )
+    # join against the ORIGINAL source: exact_ids is already a subset of
+    # the URL survivors, so one semi-join reproduces the composition
+    exact = source.join(exact_ids, on=id_col, how="left_semi")
+    # built on first use, so a resumed run whose `pairs` stage exists
+    # never recomputes signatures
+    bands = functools.cache(
+        lambda: stage(
+            "bands",
+            lambda: band_assignments(
+                minhash_signatures(exact, text_col, id_col, k, num_hashes, hash_fn),
+                num_hashes, rows_per_band,
+            ),
         )
+    )
+    pairs = stage(
+        "pairs",
+        lambda: jaccard_for_pairs(
+            exact, candidate_pairs_from_bands(bands(), max_bucket),
+            text_col, id_col, k, threshold,
+        ),
+    )
+    clusters = stage("clusters", lambda: connected_components(pairs, max_iter=max_iter))
 
     # Decide survivors on ID-ONLY lineage, touch full rows ONCE (guide
     # §8: decide with small rows, move big rows once). The previous
@@ -312,7 +251,7 @@ def dedup_corpus(
     result = exact.join(final_ids, id_col, "left_semi")
     if band_index_table is not None:
         surviving_bands = (
-            bands.join(
+            bands().join(
                 final_ids.withColumnRenamed(id_col, "id"), "id", "left_semi"
             )
             .withColumn("hash_fn", F.lit(hash_fn))

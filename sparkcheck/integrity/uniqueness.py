@@ -8,8 +8,7 @@ COUNT(*) − COUNT(DISTINCT c) (business_rules/models.py:361-381).
 Scale design:
 - The summary needs no row-level shuffle at all: ``count − count_distinct``
   is a single aggregate pass (count_distinct expands to a partial
-  de-duplicating hash agg; for profiling-grade answers use
-  ``approx_count_distinct`` — HLL, zero extra shuffle).
+  de-duplicating hash agg).
 - Violation ROWS need a per-key count. The natural plan is a hash
   aggregation on the key — a shuffle on the key. For Zipf-skewed keys
   (hot url-hosts) the straight groupBy puts a hot key on one reducer, so
@@ -34,17 +33,14 @@ def _nonnull(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     return df.where(cond)
 
 
-def uniqueness_summary(df: DataFrame, key_cols: Sequence[str], approx: bool = False) -> DataFrame:
+def uniqueness_summary(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """One-row frame: total_keys (non-null), distinct_keys, duplicate_excess
     (= COUNT − COUNT DISTINCT, the reference's violation count)."""
     nn = _nonnull(df, key_cols)
     key = F.struct(*[F.col(c) for c in key_cols]) if len(key_cols) > 1 else F.col(key_cols[0])
-    distinct = (
-        F.approx_count_distinct(key) if approx else F.count_distinct(key)
-    ).alias("distinct_keys")
     return nn.agg(
         F.count(F.lit(1)).alias("total_keys"),
-        distinct,
+        F.count_distinct(key).alias("distinct_keys"),
     ).select(
         "total_keys",
         "distinct_keys",

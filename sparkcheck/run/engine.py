@@ -269,7 +269,7 @@ class ValidationEngine:
         t1 = time.monotonic()
         if isinstance(r, UniqueRule):
             tbl = tables.get(getattr(r, "table", ""), df)
-            frame = uniqueness_summary(tbl, list(r.key_columns), approx=False)
+            frame = uniqueness_summary(tbl, list(r.key_columns))
             s = frame.collect()[0]
             viol = s["duplicate_excess"]
             return RuleOutcome(

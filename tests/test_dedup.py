@@ -403,9 +403,10 @@ def test_dedup_corpus_end_to_end(spark):
 def test_dedup_corpus_checkpoint_resume(spark, tmp_path, monkeypatch):
     """VERDICT r3 #7 done-criterion: a run killed after the pairs stage
     resumes WITHOUT recomputing it. Stage outputs persist under
-    (input_fingerprint, params); the resumed run must not invoke the
-    minhash builder again (counter) and must launch far fewer Spark
-    jobs than the cold run (statusTracker)."""
+    (input_fingerprint, params); the resumed run must not build MinHash
+    signatures again (counter), not even when the `bands` stage is
+    absent (the layout written before bands became a stage), and must
+    launch far fewer Spark jobs than the cold run (statusTracker)."""
     import pytest as _pytest
 
     import sparkcheck.dedup.pipeline as pl
@@ -430,13 +431,13 @@ def test_dedup_corpus_checkpoint_resume(spark, tmp_path, monkeypatch):
         dedup_corpus(df, quality_col="quality", checkpoint_dir=ckpt)
 
     calls = {"minhash": 0}
-    real_mh = pl.minhash_near_duplicates
+    real_mh = pl.minhash_signatures
 
     def counting_mh(*a, **k):
         calls["minhash"] += 1
         return real_mh(*a, **k)
 
-    monkeypatch.setattr(pl, "minhash_near_duplicates", counting_mh)
+    monkeypatch.setattr(pl, "minhash_signatures", counting_mh)
 
     # cold run killed right after the pairs stage persists
     def boom(*a, **k):
@@ -447,10 +448,15 @@ def test_dedup_corpus_checkpoint_resume(spark, tmp_path, monkeypatch):
         dedup_corpus(df, **kw)
     assert calls["minhash"] == 1
     import os
+    import shutil
 
     key_dir = os.path.join(ckpt, os.listdir(ckpt)[0])
+    assert os.path.exists(os.path.join(key_dir, "bands", "_SUCCESS"))
     assert os.path.exists(os.path.join(key_dir, "pairs", "_SUCCESS"))
     assert not os.path.exists(os.path.join(key_dir, "clusters", "_SUCCESS"))
+    # a checkpoint dir without the bands stage must still resume from
+    # pairs: bands is only built when a stage that needs it is missing
+    shutil.rmtree(os.path.join(key_dir, "bands"))
 
     # resume: clusters stage runs, exact_ids + pairs are read back
     from sparkcheck.dedup.clusters import connected_components as real_cc
@@ -462,7 +468,8 @@ def test_dedup_corpus_checkpoint_resume(spark, tmp_path, monkeypatch):
     resume1_jobs = len(sc.statusTracker().getJobIdsForGroup("dedup-resume-1"))
     sc.setJobGroup("", "")
     assert kept == [2, 5]
-    assert calls["minhash"] == 1, "pairs stage recomputed on resume"
+    assert calls["minhash"] == 1, "signatures recomputed on resume"
+    assert not os.path.exists(os.path.join(key_dir, "bands"))
 
     # fully-checkpointed re-run: every stage read back, jobs ≈ assembly only
     sc.setJobGroup("dedup-resume-2", "all stages cached")
@@ -478,8 +485,8 @@ def test_dedup_corpus_checkpoint_resume(spark, tmp_path, monkeypatch):
     # a NEW input snapshot invalidates the key: stages rebuild
     with _pytest.raises(Exception):
         # different fingerprint → fresh key dir → minhash must run again;
-        # boom2 proves the builder chain is re-entered
-        monkeypatch.setattr(pl, "minhash_near_duplicates", boom)
+        # boom proves the builder chain is re-entered
+        monkeypatch.setattr(pl, "minhash_signatures", boom)
         dedup_corpus(df, quality_col="quality", threshold=0.5, num_hashes=8,
                      rows_per_band=2, checkpoint_dir=ckpt,
                      input_fingerprint="snap-2")
@@ -636,6 +643,75 @@ def test_dedup_corpus_url_first_stage(spark, tmp_path):
     assert out == [1, 3, 4]
     key_dir = os.path.join(ck, os.listdir(ck)[0])
     assert os.path.exists(os.path.join(key_dir, "url_ids", "_SUCCESS"))
+
+
+@pytest.mark.parametrize("checkpointed", [False, True], ids=["memory", "parquet"])
+@pytest.mark.parametrize("with_index", [False, True], ids=["no_index", "index"])
+def test_dedup_corpus_materializers_agree(spark, tmp_path, monkeypatch,
+                                         checkpointed, with_index):
+    """In-memory (localCheckpoint) and checkpointed (parquet) stages run
+    one graph: with url_col set, every materializer x band-index
+    combination keeps the same survivors, and a written band index holds
+    exactly the surviving docs' band rows. The frame handed to
+    write_band_index reads the materialized bands stage: no shingle or
+    band explode (Generate) is left under it to recompute."""
+    import sparkcheck.dedup.pipeline as pl
+    from sparkcheck.dedup import band_assignments, dedup_corpus
+
+    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+            "lambda mu nu xi omicron pi rho sigma tau upsilon")
+    rows = [
+        (1, "https://ex.com/a", base + " one"),
+        (2, "https://WWW.ex.com/a?utm_source=x", "other text on a re-crawl"),
+        (3, "https://ex.com/b", base + " two"),     # near dup of 1
+        (4, None, base + " one"),                  # exact dup of 1
+        (5, "https://ex.com/c", "completely different words with no overlap"),
+        (6, "https://ex.com/d", base + " three"),  # near dup of 1 and 3
+        (7, "https://ex.com/e", "yet another unrelated document body here"),
+        (8, "relative/path", "an unparseable url is exempt from url dedup"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, url string, text string")
+    table = f"agree_idx_{int(checkpointed)}"
+    kw = dict(url_col="url", threshold=0.5, num_hashes=8, rows_per_band=2)
+    if checkpointed:
+        kw.update(checkpoint_dir=str(tmp_path / "ck"), input_fingerprint="s1")
+    if with_index:
+        kw.update(band_index_table=table, band_index_buckets=4)
+
+    handed = []
+    real_write = pl.write_band_index
+
+    def recording_write(bands, *a, **k):
+        handed.append(bands._jdf.queryExecution().executedPlan().toString())
+        return real_write(bands, *a, **k)
+
+    monkeypatch.setattr(pl, "write_band_index", recording_write)
+    try:
+        kept = sorted(r["doc_id"] for r in dedup_corpus(df, **kw).collect())
+        assert kept == [1, 5, 7, 8]
+        if not with_index:
+            assert handed == []
+            return
+        assert len(handed) == 1 and "Generate" not in handed[0], handed
+        cols = ["id", "band_idx", "band_key", "hash_fn", "num_hashes",
+                "rows_per_band", "k"]
+        got = sorted(map(tuple, spark.table(table).select(*cols).collect()))
+        survivors = df.where(F.col("doc_id").isin(kept))
+        want_bands = (
+            band_assignments(
+                minhash_signatures(survivors, "text", "doc_id", 3, 8, "xxhash64"),
+                8, 2,
+            )
+            .withColumn("hash_fn", F.lit("xxhash64"))
+            .withColumn("num_hashes", F.lit(8))
+            .withColumn("rows_per_band", F.lit(2))
+            .withColumn("k", F.lit(3))
+        )
+        want = sorted(map(tuple, want_bands.select(*cols).collect()))
+        assert got == want and len(got) == 4 * len(kept)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}_counts")
 
 
 def test_dedup_corpus_leaves_band_index_for_incremental(spark, tmp_path):

@@ -32,7 +32,7 @@ def test_uniqueness_with_planted_duplicates(spark):
     # customers with a duplicated customer_id (FIXTURES §5)
     rows = [(i, f"c{i}@x.com") for i in range(100)] + [(7, "dup@x.com"), (7, "dup2@x.com")]
     df = spark.createDataFrame(rows, "customer_id int, email string")
-    s = uniqueness_summary(df, ["customer_id"], approx=False).collect()[0]
+    s = uniqueness_summary(df, ["customer_id"]).collect()[0]
     assert s["total_keys"] == 102
     assert s["distinct_keys"] == 100
     assert s["duplicate_excess"] == 2  # COUNT − COUNT DISTINCT
@@ -50,7 +50,7 @@ def test_uniqueness_nulls_exempt(spark):
     df = spark.createDataFrame(
         [(None,), (None,), (1,), (2,)], "k int"
     )
-    s = uniqueness_summary(df, ["k"], approx=False).collect()[0]
+    s = uniqueness_summary(df, ["k"]).collect()[0]
     assert s["total_keys"] == 2 and s["duplicate_excess"] == 0
     assert duplicate_key_counts(df, ["k"]).count() == 0
 

@@ -43,7 +43,7 @@ def test_planted_violation_counts(spark):
 
 def test_planted_duplicates(spark):
     df = webtext_table(spark, N)
-    s = uniqueness_summary(df, ["url"], approx=False).collect()[0]
+    s = uniqueness_summary(df, ["url"]).collect()[0]
     # each id%1000==7 row copies url(id−1) ⇒ 5 duplicated urls, excess 5
     assert s["duplicate_excess"] == EXPECTED_PER_CLASS
     dups = duplicate_key_counts(df, ["url"]).collect()
